@@ -1,4 +1,4 @@
-"""Bloom-gated semi-join query: runtime-filter pruning as a user operator."""
+"""Semi-join revenue query: the runtime-filter case, planned by Spark."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.rounding import dec_sum
-from ..operators.bloomfilter import bloom_semi_join
 from ..sources import table
 from .catalog import register
 
@@ -25,16 +24,20 @@ from .catalog import register
     bench=True,
 )
 def bloom_semi_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue from lineitems shipped by negative-balance suppliers, with the
-    semi join gated by an explicit bloom filter: the ~6%-selective supplier
-    set aggregates into a 128 KB bitmap, the fact table is pre-filtered
-    map-side (non-matching rows never reach a shuffle), and a final semi
-    join removes bloom false positives — so the result is EXACTLY the
-    oracle's IN-subquery. At 100 TB this is the pattern for semi joins whose
-    build side is too big to broadcast but whose key set fits a bitmap."""
+    """Revenue from lineitems shipped by negative-balance suppliers, as a
+    plain ``left_semi`` join — exactly the oracle's IN-subquery. Spark
+    plans both scale regimes itself: a build side under the broadcast
+    threshold becomes ``BroadcastHashJoin LeftSemi`` (AQE), and one too
+    big to broadcast becomes a shuffle semi join whose fact-side scan the
+    optimizer's runtime bloom filter (``might_contain`` over a
+    ``bloom_filter_agg`` of the build keys) prunes before the shuffle."""
     li = table(spark, sf_dir, "lineitem")
-    watch = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0)
-    hits = bloom_semi_join(li, watch, "l_suppkey", "s_suppkey")
+    watch = (
+        table(spark, sf_dir, "supplier")
+        .filter(F.col("s_acctbal") < 0)
+        .select(F.col("s_suppkey").alias("l_suppkey"))
+    )
+    hits = li.join(watch, "l_suppkey", "left_semi")
     return hits.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_lines"),
         dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("revenue"),

@@ -27,10 +27,11 @@ K = 3
     bench=True,
 )
 def topk_pruned_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 events by value per user with the map-side prune: each input
-    partition first drops rows that already lose locally, so the window
-    shuffle carries ≤ k·|users|·|partitions| rows instead of every event.
-    The oracle is the plain (unpruned) window — results must be identical."""
+    """Top-3 events by value per user with the map-side prune done by
+    Spark's ``WindowGroupLimit``: each input partition first drops rows
+    that already lose locally, so the window shuffle carries
+    ≤ k·|users|·|partitions| rows instead of every event. The oracle is
+    the plain window — results must be identical."""
     import pyspark.sql.functions as F
 
     ev = table(spark, sf_dir, "events").select(

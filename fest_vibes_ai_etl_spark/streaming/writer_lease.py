@@ -65,7 +65,8 @@ _HELD: dict[tuple[int, str], "WriterLease"] = {}
 
 
 class WriterLeaseError(RuntimeError):
-    """A second writer is active on the store (or won the claim race).
+    """A second writer is active on the store (or won the claim race), or
+    the lease directory could not be written.
 
     The single-writer contract (STATE.md §5) makes maintenance, purge,
     revise, and delete ops mutually exclusive per store; the loser must
@@ -152,20 +153,31 @@ class _HadoopLeaseBackend:
     def put_if_absent(self, path: str, data: bytes) -> bool:
         # content-atomic (see the local backend): write a private temp
         # file, then rename WITHOUT overwrite — atomic on HDFS, so the
-        # target name never exists with a partial payload
+        # target name never exists with a partial payload. False means
+        # only "lost the rename race"; an I/O failure is a typed
+        # WriterLeaseError, so a retry loop on False never spins on it.
+        from py4j.protocol import Py4JError
+
         jvm, p, fs = self._fs(path)
         tmp_path = f"{path}.tmp.{uuid.uuid4().hex}"
         _, tp, _ = self._fs(tmp_path)
-        out = fs.create(tp, True)
-        out.write(bytearray(data))
-        out.close()
         try:
-            if fs.rename(tp, p):
-                return True
-            return False
+            out = fs.create(tp, True)
+            try:
+                out.write(bytearray(data))
+            finally:
+                out.close()
+            return bool(fs.rename(tp, p))
+        except (Py4JError, OSError) as e:
+            raise WriterLeaseError(
+                f"lease store I/O failed writing {path}: {e}"
+            ) from e
         finally:
-            if fs.exists(tp):
-                fs.delete(tp, False)
+            try:
+                if fs.exists(tp):
+                    fs.delete(tp, False)
+            except (Py4JError, OSError):
+                pass  # best effort; the I/O error (if any) is already raised
 
     def delete(self, path: str) -> None:
         jvm, p, fs = self._fs(path)

@@ -81,15 +81,34 @@ def test_ngram_jaccard_uses_cached_signature(spark):
     spark.catalog.clearCache()
 
 
-def test_bloom_probe_only_on_probe_side(spark):
-    # round 14: the bloom probe is JVM-native — NO Python eval node in the
-    # plan (the bitmap rides a one-row broadcast, bit tests run in codegen);
-    # the exact semi join still gates the result
+def test_bloom_semi_join_is_a_plain_semi_join(spark):
+    # the semi join is Spark's own: no Python eval node, no bitmap attach
     q = catalog.queries()["bloom_semi_join_revenue"]
     plan = _plan(q(spark, SF_DIR))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
     assert "LeftSemi" in plan
-    assert "BroadcastNestedLoopJoin" in plan  # the one-row bitmap attach
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_bloom_semi_join_unbroadcastable_gets_runtime_filter(spark):
+    # a build side too big to broadcast: the optimizer injects its own
+    # bloom runtime filter on the fact-side scan. The application-side
+    # threshold (default 10 GB) is lowered so it fires at test scale.
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        q = catalog.queries()["bloom_semi_join_revenue"]
+        plan = q(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert "might_contain" in plan and "bloom_filter_agg" in plan
+    assert "LeftSemi" in plan
 
 
 def test_bm25_stats_broadcast_no_udf(spark):

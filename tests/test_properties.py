@@ -1,6 +1,7 @@
 """Property-based tests (hypothesis) for the pure-math kernels: Morton
-interleave and bloom membership — driver-side math mirrored against the
-Spark column expressions elsewhere (tests/test_zorder.py, test_bloom.py)."""
+interleave and winnowing fingerprints — driver-side math mirrored against
+the Spark column expressions elsewhere (tests/test_zorder.py,
+operators/dedup.py)."""
 
 from __future__ import annotations
 
@@ -33,37 +34,6 @@ def test_morton_roundtrip_and_monotone_quadrants(x, y):
     # identity — the property parquet min/max pruning relies on
     assert (z >> 31) & 1 == (y >> 15) & 1
     assert (z >> 30) & 1 == (x >> 15) & 1
-
-
-@settings(max_examples=50, deadline=None)
-@given(
-    st.sets(st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=200),
-    st.sets(st.integers(min_value=-(2**62), max_value=2**62), min_size=1, max_size=200),
-)
-def test_bloom_membership_properties(build_keys, probe_keys):
-    # pure-python mirror of operators/bloomfilter.py's bit layout (bigint
-    # bitmap; hash() stands in for xxhash64 — any deterministic seeded hash
-    # preserves the NO-FALSE-NEGATIVES property being tested)
-    num_bits, num_hashes = 1 << 14, 5
-
-    def positions(key):
-        return [hash((key, seed)) % num_bits for seed in range(num_hashes)]
-
-    bitmap = 0
-    for k in build_keys:
-        for p in positions(k):
-            bitmap |= 1 << p
-
-    def contains(k):
-        return all((bitmap >> p) & 1 for p in positions(k))
-
-    # no false negatives, ever
-    assert all(contains(k) for k in build_keys)
-    # false-positive rate on disjoint probes is bounded well below 50%
-    outside = [k for k in probe_keys if k not in build_keys]
-    if len(outside) >= 20:
-        fp = sum(1 for k in outside if contains(k)) / len(outside)
-        assert fp < 0.5
 
 
 # --- winnowing fingerprint properties (pure-python mirror of

@@ -1,8 +1,6 @@
-"""Shuffle-pruned top-k: pruned ≡ unpruned, and the prune actually prunes."""
+"""Shuffle-pruned top-k: the map-side prune is Spark's own WindowGroupLimit."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from conftest import SF_DIR
 
@@ -10,58 +8,9 @@ from fest_vibes_ai_etl_spark.operators.topk import topk_per_group
 from fest_vibes_ai_etl_spark.sources import table
 
 
-def test_pruned_equals_unpruned(spark):
-    ev = table(spark, SF_DIR, "events").select(
-        "event_id", "user_id", F.round("value", 2).alias("value")
-    )
-    pruned = {
-        tuple(r)
-        for r in topk_per_group(
-            ev, ["user_id"], "value", "event_id", 3, prune=True
-        ).collect()
-    }
-    plain = {
-        tuple(r)
-        for r in topk_per_group(
-            ev, ["user_id"], "value", "event_id", 3, prune=False
-        ).collect()
-    }
-    assert pruned == plain and len(pruned) > 0
-
-
-def test_map_side_prune_reduces_rows(spark):
-    ev = (
-        table(spark, SF_DIR, "events")
-        .select("event_id", "user_id", "value")
-        .repartition(8)
-    )
-    total = ev.count()
-    # count rows surviving the local prune (the shuffle input)
-    from fest_vibes_ai_etl_spark.operators import topk as T
-
-    pruned = T.topk_per_group(ev, ["user_id"], "value", "event_id", 2)
-    n_users = ev.select("user_id").distinct().count()
-
-    def prune_stage(batches):  # replicate the map-side prune alone
-        for pdf in batches:
-            ranked = pdf.sort_values(
-                ["user_id", "value", "event_id"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            yield ranked.groupby(["user_id"], sort=False).head(2)
-
-    survivors = ev.mapInPandas(prune_stage, schema=ev.schema).count()
-    # survivor bound: k * |users| * |partitions|; and it actually pruned
-    assert survivors <= 2 * n_users * 8
-    assert survivors < total
-    assert pruned.count() <= 2 * n_users
-
-
 def test_default_path_uses_jvm_window_group_limit(spark):
-    """The default (no Python prune) plan must carry Spark's own map-side
-    WindowGroupLimit and NO Python boundary — the reason prune defaults off
-    on Spark >= 3.5."""
+    """The plan must carry Spark's own map-side WindowGroupLimit and NO
+    Python boundary."""
     ev = table(spark, SF_DIR, "events").select("event_id", "user_id", "value")
     plan = (
         topk_per_group(ev, ["user_id"], "value", "event_id", 3)

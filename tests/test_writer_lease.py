@@ -316,3 +316,72 @@ def test_claim_file_never_visible_partially_written(tmp_path):
         assert f.read() == b'{"owner": "x"}'
     leftovers = [n for n in os.listdir(tmp_path / "lease") if ".tmp." in n]
     assert leftovers == []
+
+
+class _FailingHadoopFS:
+    """Fake JVM filesystem for ``_HadoopLeaseBackend``: an empty store
+    whose writes fail with a Py4J error at ``create`` (or at ``write``)."""
+
+    def __init__(self, fail_at: str):
+        self.fail_at = fail_at
+        self.files: set[str] = set()
+        self.creates = 0
+
+    def exists(self, p):
+        return p in self.files
+
+    def create(self, p, overwrite):
+        from py4j.protocol import Py4JError
+
+        self.creates += 1
+        if self.fail_at == "create":
+            raise Py4JError("java.io.IOException: namenode unreachable")
+        self.files.add(p)
+        fs = self
+
+        class _Out:
+            def write(self, data):
+                if fs.fail_at == "write":
+                    raise Py4JError("java.io.IOException: disk quota exceeded")
+
+            def close(self):
+                pass
+
+        return _Out()
+
+    def delete(self, p, recursive):
+        self.files.discard(p)
+        return True
+
+
+def _fake_hadoop(monkeypatch, fail_at):
+    from fest_vibes_ai_etl_spark.streaming.writer_lease import _HadoopLeaseBackend
+
+    fs = _FailingHadoopFS(fail_at)
+    monkeypatch.setattr(_HadoopLeaseBackend, "_fs", lambda self, path: (None, path, fs))
+    return _HadoopLeaseBackend(None), fs
+
+
+def test_hadoop_backend_io_error_is_typed_and_does_not_spin(monkeypatch):
+    """A JVM I/O failure while writing a claim is a WriterLeaseError, not
+    a raw Py4J error, and not a False "lost the race" that would send
+    bump_store_gen's put-if-absent retry loop spinning."""
+    from fest_vibes_ai_etl_spark.streaming.writer_lease import bump_store_gen
+
+    backend, fs = _fake_hadoop(monkeypatch, "create")
+    lease = WriterLease(None, "hdfs://nn/store", op="maintain", backend=backend)
+    with pytest.raises(WriterLeaseError, match="I/O failed"):
+        lease.acquire()
+    assert lease.epoch is None
+
+    fs.creates = 0
+    with pytest.raises(WriterLeaseError, match="I/O failed"):
+        bump_store_gen(None, "hdfs://nn/store")
+    assert fs.creates == 1  # one attempt, no retry on an I/O error
+
+
+def test_hadoop_backend_cleans_temp_on_write_failure(monkeypatch):
+    backend, fs = _fake_hadoop(monkeypatch, "write")
+    with pytest.raises(WriterLeaseError):
+        backend.put_if_absent("hdfs://nn/store/_writer_lease/e000000000001.json", b"{}")
+    assert fs.creates == 1 and fs.files == set()  # the temp file was removed

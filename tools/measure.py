@@ -1,23 +1,24 @@
 #!/usr/bin/env python
-"""Round-15 optimization measurement harness.
+"""Per-query isolation measurement harness.
 
 Times individual catalog queries in isolation (bench methodology: fn().count()
 after warmup, plus a noop-sink wall that forces every column — guide §1.4) and
-dumps each query's `.explain("formatted")` to plans/r14/<name>_<tag>.txt.
+dumps each query's `.explain("formatted")` to plans/$PLANS_TAG/<name>_<tag>.txt
+(PLANS_TAG defaults to r15; PLANS_TAG=r14 writes where the round-14 tool did).
 
 Usage:
-  python tools/r14_measure.py --queries q1_pricing_summary,dedup_containment \
+  python tools/measure.py --queries q1_pricing_summary,dedup_containment \
       --tag before --reps 3 [--sf /root/testdata/sf0.1] [--explain-only]
-  python tools/r14_measure.py --all-bench --tag before --reps 3
+  python tools/measure.py --all-bench --tag before --reps 3
 """
 
 from __future__ import annotations
 
 import argparse
-import os
 import contextlib
 import io
 import json
+import os
 import sys
 import time
 from pathlib import Path
@@ -28,12 +29,19 @@ from fest_vibes_ai_etl_spark.plans.catalog import REGISTRY, queries  # noqa: E40
 from fest_vibes_ai_etl_spark.session import get_spark  # noqa: E402
 
 
+def _positive_int(text: str) -> int:
+    n = int(text)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default="")
     ap.add_argument("--all-bench", action="store_true")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--reps", type=int, default=3)
+    ap.add_argument("--reps", type=_positive_int, default=3)
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--warm-sf", default="/root/testdata/sf0.001")
     ap.add_argument("--explain-only", action="store_true")
@@ -53,7 +61,7 @@ def main() -> None:
     plans_dir = Path(__file__).resolve().parents[1] / "plans" / os.environ.get("PLANS_TAG", "r15")
     plans_dir.mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark("r14-measure")
+    spark = get_spark("measure")
     spark.sparkContext.setLogLevel("ERROR")
 
     out: dict[str, dict] = {}
