@@ -2,11 +2,12 @@
 
 The reference SETEXes one JSON array per date (/root/reference/src/shared/
 cache/redis_cache.py:194-216). Distributed equivalent: group payload rows to
-one (key, json_array, ttl) row per date, then ``foreachPartition`` with a
-pluggable client factory — one connection per partition, pipelined writes,
-no driver collect. Redis isn't in this container, so the default client is
-an in-memory dict-backed stub exercising the exact same code path; swap
-``client_factory`` for ``redis.Redis`` in deployment.
+one (key, json_array, ttl) row per date, then write every partition through
+a pluggable client factory in ONE Spark action — one connection per
+non-empty partition, pipelined writes, and only a key count per partition
+comes back to the driver. Redis isn't in this container, so the default
+client is an in-memory dict-backed stub exercising the exact same code
+path; swap ``client_factory`` for ``redis.Redis`` in deployment.
 """
 
 from __future__ import annotations
@@ -66,21 +67,26 @@ def export_to_cache(
     client_factory: Callable[[], object] | None = None,
     namespace: str = "default",
 ) -> int:
-    """Write one document per date key through the client, partition-local.
-    Returns the number of keys written (a driver-side count, not a collect
-    of the documents)."""
+    """Write one document per date key through the client, partition-local,
+    in one Spark action. Returns the number of keys written (the sum of
+    the partitions' key counts, not a collect of the documents)."""
     docs = aggregate_per_date(payload)
 
-    def write_partition(rows) -> None:
-        client = client_factory() if client_factory else DictCacheClient(namespace)
+    def write_partition(rows):
+        client, n = None, 0
         for row in rows:
+            if client is None:
+                client = client_factory() if client_factory else DictCacheClient(namespace)
             client.setex(row.cache_key, int(row.ttl_seconds), row.document)
+            n += 1
+        # pipelined clients buffer writes (Redis); an empty partition
+        # opened no client, so there is nothing to flush
         flush = getattr(client, "flush", None)
-        if flush is not None:  # pipelined clients buffer writes (Redis)
+        if flush is not None:
             flush()
+        yield n
 
-    docs.foreachPartition(write_partition)
-    return docs.count()
+    return sum(docs.rdd.mapPartitions(write_partition).collect())
 
 
 def redis_client_factory(

@@ -15,6 +15,17 @@ date-partitioned DataFrame:
 The per-date fan-out disappears: dates are partitions of one DataFrame, and
 Spark's scheduler replaces MaxConcurrency=5. Writes are partitioned by date
 so downstream consumers prune.
+
+Each layer is computed once per run. The reference's stages each read the
+previous stage's landed output once; here the enriched silver frames are
+local checkpoints, so the silver writes, the gold write and the cache
+export all read the same materialised blocks instead of re-running bronze →
+normalize → geocode → embed per action, and gold (one join DAG for the
+whole window) is planned over those small leaves. Trade-off: local
+checkpoint blocks live on the executors only, so losing an executor fails
+the run rather than recomputing the lost partitions. The run is idempotent
+(partition overwrites, merge_store txns) and ``orchestrate.backfill_dates``
+retries a failed date.
 """
 
 from __future__ import annotations
@@ -36,8 +47,15 @@ def run_pipeline(
     geocode_cache: DataFrame | None = None,
     with_embeddings: bool = True,
 ) -> dict[str, DataFrame]:
-    """Bronze → silver → gold for the given dates. Returns every layer
-    (callers persist with ``df.write.partitionBy(...)`` as needed)."""
+    """Bronze → silver → gold for the given dates. Returns every layer.
+
+    The silver frames (dims, fact and bridges, enriched) come back as
+    local checkpoints: each is computed once, on its first action, and
+    every later action reads its blocks — the blocks are freed when the
+    frames go out of scope. A lost executor therefore fails the run
+    instead of recomputing; re-run it (the run is idempotent).
+    ``quarantine`` stays lazy (read once) and ``cache_payload`` is one
+    lazy gold plan over the checkpointed silver for all ``dates``."""
     # Externally-created sessions (the correctness driver's, a user's) need
     # the package shipped to executor workers before any UDF stage runs.
     configure(spark)
@@ -89,15 +107,9 @@ def run_pipeline(
             "embed_text"
         )
 
-    golds = {
-        d: gold.to_cache_payload(gold.events_for_date(silver, d, ref_date=ref_date))
-        for d in dates
-    }
-    gold_all = None
-    for df in golds.values():
-        gold_all = df if gold_all is None else gold_all.unionByName(df)
-
-    return {**silver, "quarantine": quarantined, "cache_payload": gold_all}
+    silver = {name: df.localCheckpoint(eager=False) for name, df in silver.items()}
+    payload = gold.to_cache_payload(gold.events_for_date(silver, dates, ref_date=ref_date))
+    return {**silver, "quarantine": quarantined, "cache_payload": payload}
 
 
 def persist_silver_versioned(

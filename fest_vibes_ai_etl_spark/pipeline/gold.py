@@ -13,6 +13,8 @@ join DAG.
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -28,10 +30,16 @@ def _genre_lists(bridge: DataFrame, genre_dim: DataFrame, key: str) -> DataFrame
     )
 
 
-def events_for_date(silver: dict[str, DataFrame], date_str: str, ref_date: str | None = None) -> DataFrame:
-    """One row per event on ``date_str`` with nested artist/venue/genre
-    payloads, ordered by performance_time — the EventDTO cache document."""
-    ev = silver["events"].filter(F.col("event_date") == F.lit(date_str).cast("date"))
+def events_for_date(
+    silver: dict[str, DataFrame], date_str: str | Sequence[str], ref_date: str | None = None
+) -> DataFrame:
+    """One row per event on ``date_str`` (one date, or a window of dates
+    planned as ONE join DAG) with nested artist/venue/genre payloads,
+    ordered by performance_time — the EventDTO cache document."""
+    dates = [date_str] if isinstance(date_str, str) else list(date_str)
+    ev = silver["events"].filter(
+        F.col("event_date").isin([F.lit(d).cast("date") for d in dates])
+    )
 
     artist_genres = _genre_lists(silver["artist_genres"], silver["genres"], "artist_id")
     event_genres = _genre_lists(silver["event_genres"], silver["genres"], "event_id")
@@ -112,8 +120,9 @@ def events_for_date(silver: dict[str, DataFrame], date_str: str, ref_date: str |
 
 def to_cache_payload(gold: DataFrame) -> DataFrame:
     """Serialize each row to the cache JSON document (S10 sink shape):
-    (cache_key, payload, ttl_seconds). The actual Redis write is a
-    foreachPartition pipeline in deployment; files-as-cache in tests."""
+    (cache_key, payload, ttl_seconds). The actual Redis write is
+    ``cache_sink.export_to_cache``'s one-action partition pipeline in
+    deployment; files-as-cache in tests."""
     return gold.select(
         F.concat(F.lit("events:"), F.col("event_date").cast("string")).alias("cache_key"),
         F.to_json(

@@ -3,9 +3,9 @@ first-class ``df.write.format(...)`` target.
 
 The reference materializes its query result into Redis with ``SETEX
 events:{date}`` (/root/reference/src/shared/cache/redis_cache.py:194-216).
-pipeline/cache_sink.py already covers the foreachPartition client shape;
+pipeline/cache_sink.py already covers the per-partition client shape;
 this module expresses the same sink through Spark 4's DataSource writer
-API, which buys the two things foreachPartition cannot give:
+API, which buys the two things a per-partition client write cannot give:
 
 - **exactly-once visibility**: each task writes its rows to a uniquely
   named JSON file and returns the name as its commit message; ONLY the

@@ -91,6 +91,9 @@ class _LocalLeaseBackend:
         with open(path, "rb") as f:
             return f.read()
 
+    def mtime(self, path: str) -> float:
+        return os.path.getmtime(path)
+
     def put_if_absent(self, path: str, data: bytes) -> bool:
         # CONTENT-atomic, not just name-atomic: a bare O_CREAT|O_EXCL
         # followed by write() exposes an empty claim file between the two
@@ -149,6 +152,10 @@ class _HadoopLeaseBackend:
             )
         finally:
             stream.close()
+
+    def mtime(self, path: str) -> float:
+        jvm, p, fs = self._fs(path)
+        return fs.getFileStatus(p).getModificationTime() / 1000.0
 
     def put_if_absent(self, path: str, data: bytes) -> bool:
         # content-atomic (see the local backend): write a private temp
@@ -238,24 +245,21 @@ class WriterLease:
         head, claims, releases = self._scan()
         if head and head not in releases:
             # unreleased head: an active writer unless its TTL expired
+            claim_path = f"{self._lease_dir}/e{head:012d}.json"
             try:
-                payload = json.loads(
-                    self.backend.get(
-                        f"{self._lease_dir}/e{head:012d}.json"
-                    ).decode("utf-8")
-                )
+                payload = json.loads(self.backend.get(claim_path).decode("utf-8"))
             except Exception:
-                # Unreadable claim payload = ACTIVE, never expired: claims
-                # are created content-atomically, so this is a transient
-                # read glitch (or real corruption), and presuming the
-                # holder dead on it re-opens the multi-winner hole the
-                # atomic create closed. Back off like any other loser.
-                raise WriterLeaseError(
-                    f"store {self.store_dir}: writer epoch {head} claim "
-                    f"exists but its payload is unreadable — treating the "
-                    f"holder as active (single-writer contract, "
-                    f"STATE.md §5); back off and retry"
-                )
+                # Unreadable claim payload: claims are created content-
+                # atomically, so this is a transient read glitch or real
+                # corruption. Presuming the holder dead at once re-opens
+                # the multi-winner hole the atomic create closed; refusing
+                # forever lets one corrupt claim block the store for good.
+                # So the claim file's mtime (as the backend sees it) stands
+                # in for its acquisition time: active until the TTL runs.
+                payload = {
+                    "acquired_unix": self.backend.mtime(claim_path),
+                    "op": "unreadable claim",
+                }
             age = time.time() - float(payload.get("acquired_unix", 0.0))
             if age < float(payload.get("ttl_s", self.ttl_s)):
                 raise WriterLeaseError(

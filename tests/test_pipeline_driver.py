@@ -70,6 +70,83 @@ def test_export_to_cache_filesystem_client(spark, result):
     assert names == ["Galactic", "Ellis Marsalis Quartet", "Kermit Ruffins"]  # W1 order
 
 
+@pytest.mark.parametrize("layer", ["events", "artists", "venues", "cache_payload"])
+def test_enrichment_not_rerun_downstream(result, layer):
+    """Silver is materialised once: the enriched layers (and gold built
+    from them) plan over checkpointed leaves, so no action re-runs the
+    embedding's mapInPandas."""
+    plan = result[layer]._jdf.queryExecution().optimizedPlan().toString()
+    assert "MapInPandas" not in plan
+
+
+def test_window_gold_is_one_dag(result):
+    """A 2-date window is one gold join DAG filtered on both dates, not a
+    union of per-date DAGs."""
+    plan = result["cache_payload"]._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan
+
+
+def _jobs_in_group(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events land async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_export_to_cache_is_one_action(spark, result):
+    """The export evaluates the gold DAG once: it launches exactly the jobs
+    one collect of the per-date documents does (the old foreachPartition
+    plus count() launched two evaluations)."""
+    payload = result["cache_payload"]
+    # first action materialises the silver checkpoints outside both groups
+    cache_sink.aggregate_per_date(payload).collect()
+    collect_jobs = _jobs_in_group(
+        spark, "test-collect", lambda: cache_sink.aggregate_per_date(payload).collect()
+    )
+    export_jobs = _jobs_in_group(
+        spark, "test-export",
+        lambda: cache_sink.export_to_cache(payload, namespace="test-one-action"),
+    )
+    assert export_jobs == collect_jobs
+
+
+def test_export_to_cache_flushes_once_per_nonempty_partition(spark, result, tmp_path):
+    """One client per non-empty partition, flushed exactly once. The
+    writes run in executor processes, so each flush leaves a file marker
+    listing the keys it sent."""
+    out = tmp_path
+
+    class FlushClient:
+        def __init__(self):
+            self.keys = []
+
+        def setex(self, key, ttl, value):
+            self.keys.append(key)
+
+        def flush(self):
+            import uuid
+
+            (out / f"flush_{uuid.uuid4().hex}").write_text(json.dumps(self.keys))
+
+    conf = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    # keep the 8 shuffle partitions, so 2 keys leave most of them empty
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        n = cache_sink.export_to_cache(result["cache_payload"], client_factory=FlushClient)
+    finally:
+        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", conf)
+    flushed = [json.loads(p.read_text()) for p in out.glob("flush_*")]
+    assert n == 2
+    assert flushed and all(flushed)  # no client for an empty partition
+    assert sorted(k for keys in flushed for k in keys) == [
+        "events:2025-03-01", "events:2025-03-02"
+    ]
+
+
 def test_pipeline_persists_into_versioned_table(spark, tmp_path):
     """End-to-end: bronze -> run_pipeline -> versioned fact table. A
     re-run with the same txn id is collapsed (no new version); the stored

@@ -154,7 +154,7 @@ def test_real_redis_cache_sink_roundtrip(spark):
     c.setex("festvibes:test:k1", 60, "v1")
     assert c.get("festvibes:test:k1") == "v1"
 
-    # and through the real executor path (foreachPartition inside the sink)
+    # and through the real executor path (mapPartitions inside the sink)
     from fest_vibes_ai_etl_spark.pipeline.cache_sink import export_to_cache
 
     payload = spark.createDataFrame(

@@ -300,6 +300,46 @@ def test_unreadable_head_claim_is_active_not_expired(spark, tmp_path):
         b.acquire()
 
 
+def _truncate_head_claim(store: str, age_s: float) -> int:
+    """Empty the head claim in place and age its mtime by ``age_s``."""
+    lease_dir = os.path.join(store, LEASE_DIRNAME)
+    head = sorted(n for n in os.listdir(lease_dir) if n.startswith("e"))[-1]
+    path = os.path.join(lease_dir, head)
+    with open(path, "wb"):
+        pass
+    then = time.time() - age_s
+    os.utime(path, (then, then))
+    return int(head[1:-5])
+
+
+@pytest.mark.parametrize("age_s", [30, 120])
+def test_unreadable_claim_expires_by_mtime(spark, tmp_path, age_s):
+    """A permanently corrupt claim (e.g. the empty file a crashed
+    non-atomic create left behind) must not block the store forever:
+    it refuses while the claim file's mtime is younger than the TTL and
+    is claimed over like any dead holder's once it is older."""
+    store = str(tmp_path / "s")
+    WriterLease(spark, store, op="maintain").acquire()
+    head = _truncate_head_claim(store, age_s)
+    b = WriterLease(spark, store, op="maintain", ttl_s=60)
+    if age_s < b.ttl_s:
+        with pytest.raises(WriterLeaseError, match="unreadable"):
+            b.acquire()
+    else:
+        assert b.acquire() == head + 1
+
+
+def test_hadoop_backend_mtime_matches_filesystem(spark, tmp_path):
+    from fest_vibes_ai_etl_spark.streaming.writer_lease import _HadoopLeaseBackend
+
+    path = tmp_path / "e000000000001.json"
+    path.write_bytes(b"{}")
+    then = time.time() - 500
+    os.utime(path, (then, then))
+    got = _HadoopLeaseBackend(spark).mtime(f"file://{path}")
+    assert abs(got - then) < 2.0
+
+
 def test_claim_file_never_visible_partially_written(tmp_path):
     """The local backend's put-if-absent must expose the name only with
     its full payload (link-into-place), and the loser's temp must not

@@ -9,12 +9,17 @@ for: one Spark app over all dates (dates are partitions, not fan-out units).
         [--bronze DIR_OF_JSONL] [--dates 2025-03-01 2025-03-02] [--no-embeddings]
 
 With no --bronze, runs on the built-in deterministic fixture (smoke mode).
+Next to the row counts it prints each phase's wall seconds and Spark job
+count (plan = ``run_pipeline``, which materialises silver; silver and gold
+= the writes), read from the phase's job group.
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+import time
+from contextlib import contextmanager
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -27,6 +32,16 @@ from fest_vibes_ai_etl_spark.pipeline.metrics import with_row_observer  # noqa: 
 from fest_vibes_ai_etl_spark.schemas import EVENT_DTO  # noqa: E402
 from fest_vibes_ai_etl_spark.session import get_spark  # noqa: E402
 from fest_vibes_ai_etl_spark.sources.lakehouse import write_partitioned  # noqa: E402
+
+
+@contextmanager
+def phase(sc, name: str, report: dict[str, tuple[float, int]]):
+    """Run the body under Spark job group ``name``; record its wall seconds
+    and the number of Spark jobs it launched."""
+    sc.setJobGroup(name, f"run_pipeline {name}")
+    t0 = time.perf_counter()
+    yield
+    report[name] = (time.perf_counter() - t0, len(sc.statusTracker().getJobIdsForGroup(name)))
 
 
 def main() -> int:
@@ -55,28 +70,34 @@ def main() -> int:
             .collect()
         ]
 
-    layers = run_pipeline(spark, bronze, dates, with_embeddings=not args.no_embeddings)
+    sc, phases = spark.sparkContext, {}
+    with phase(sc, "plan", phases):
+        layers = run_pipeline(spark, bronze, dates, with_embeddings=not args.no_embeddings)
 
     out = args.out.rstrip("/")
     observers = {}
-    for name in ("events", "artists", "venues", "genres", "quarantine"):
-        if name in layers:
-            # metrics piggyback on the write action — no separate count pass
-            observed, observers[name] = with_row_observer(layers[name], name)
-            part = "event_date" if name == "events" else None
-            if part:
-                write_partitioned(observed, f"{out}/silver/{name}", [part])
-            else:
-                observed.write.mode("overwrite").parquet(f"{out}/silver/{name}")
-    gold = layers["cache_payload"].withColumn(
-        "event_date", F.to_date(F.regexp_extract("cache_key", r"events:(.*)$", 1))
-    )
-    gold, observers["cache_payload"] = with_row_observer(gold, "cache_payload")
-    write_partitioned(gold, f"{out}/gold/cache_payload", ["event_date"])
+    with phase(sc, "silver", phases):
+        for name in ("events", "artists", "venues", "genres", "quarantine"):
+            if name in layers:
+                # metrics piggyback on the write action — no separate count pass
+                observed, observers[name] = with_row_observer(layers[name], name)
+                part = "event_date" if name == "events" else None
+                if part:
+                    write_partitioned(observed, f"{out}/silver/{name}", [part])
+                else:
+                    observed.write.mode("overwrite").parquet(f"{out}/silver/{name}")
+    with phase(sc, "gold", phases):
+        gold = layers["cache_payload"].withColumn(
+            "event_date", F.to_date(F.regexp_extract("cache_key", r"events:(.*)$", 1))
+        )
+        gold, observers["cache_payload"] = with_row_observer(gold, "cache_payload")
+        write_partitioned(gold, f"{out}/gold/cache_payload", ["event_date"])
 
     counts = {name: obs.get["rows"] for name, obs in observers.items()}
     summary = ", ".join(f"{name}={n}" for name, n in counts.items())
+    timing = ", ".join(f"{name}={s:.2f}s/{jobs} jobs" for name, (s, jobs) in phases.items())
     print(f"pipeline complete ({summary}) -> {out}")
+    print(f"phases ({timing})")
     return 0
 
 
