@@ -362,8 +362,11 @@ def _check_add_layout(
       in between leaves a meta over an empty index, which is simply the
       layout the next batch appends under.
     """
-    from ..streaming.banded_index import hadoop_read_json, hadoop_write_json
-    from ..streaming.state_store import meta_mismatches
+    from ..streaming.state_store import (
+        hadoop_read_json,
+        hadoop_write_json,
+        meta_mismatches,
+    )
 
     import numpy as np
 
@@ -644,7 +647,7 @@ def make_index_add_processor(
         # on an EXISTING index must propagate, or a replayed batch would
         # skip the anti-join and append duplicates, breaking the
         # replays-converge contract exactly when the index is unhealthy.
-        from ..streaming.banded_index import hadoop_list_names
+        from ..streaming.state_store import hadoop_list_names
 
         jpath = jvm.org.apache.hadoop.fs.Path
         existing_cells: set[str] = set()
@@ -749,7 +752,7 @@ def delete_from_ivf_index(spark, index_dir: str, ids: list) -> int:
     from pyspark.errors import AnalysisException
     from pyspark.sql import types as T
 
-    from ..streaming.banded_index import hadoop_read_json
+    from ..streaming.state_store import hadoop_read_json
     from ..streaming.tombstones import tombstones_path
 
     meta = hadoop_read_json(spark, index_dir.rstrip("/") + "/_meta.json")
@@ -814,7 +817,7 @@ def revise_ivf_vector(
     from pyspark.errors import AnalysisException
 
     from ..errors import is_missing_or_dataless
-    from ..streaming.banded_index import hadoop_read_json
+    from ..streaming.state_store import hadoop_read_json
     from ..streaming.incremental_search import (
         invalidate_probe_memo,
         read_revisions,
@@ -926,7 +929,7 @@ def absorb_ivf_revisions(spark, index_dir: str) -> dict:
     from pyspark.errors import AnalysisException
 
     from ..errors import is_missing_or_dataless, is_path_not_found
-    from ..streaming.banded_index import hadoop_read_json
+    from ..streaming.state_store import hadoop_read_json
     from ..streaming.incremental_search import (
         invalidate_probe_memo,
         read_revisions,
@@ -1024,7 +1027,7 @@ def read_ivf_index(spark, index_dir: str, heal: str = "repair") -> DataFrame:
     directory) returns identical results. ``heal="detect"`` is the
     read-only mode: a crashed tombstone-revoke swap raises instead of
     being repaired (repair renames — single-writer only)."""
-    from ..streaming.banded_index import hadoop_read_json
+    from ..streaming.state_store import hadoop_read_json
     from ..streaming.incremental_search import (
         _apply_revisions,
         read_revisions,

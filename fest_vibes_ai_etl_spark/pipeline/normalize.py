@@ -25,10 +25,12 @@ from ..operators.merge import first_wins, surrogate_key
 DEFAULT_LAT, DEFAULT_LON = 29.9511, -90.0715  # reference configs.py:38-41
 
 
-def validate_events(bronze: DataFrame) -> DataFrame:
-    """P8 validity filter (/root/reference/src/loader/service.py:808-834):
-    drop rows missing artist name, venue name, or event date."""
-    ok = (
+def _is_valid_event():
+    """P8 validity predicate (the reference's ``src/loader/service.py``
+    808-834): artist name, venue name and event date all present and
+    non-blank. Never NULL — each ``isNotNull()`` guards its ``trim`` —
+    so ``~`` of it is the exact complement."""
+    return (
         F.col("artist_data.name").isNotNull()
         & (F.trim(F.col("artist_data.name")) != "")
         & F.col("venue_data.name").isNotNull()
@@ -36,15 +38,21 @@ def validate_events(bronze: DataFrame) -> DataFrame:
         & F.col("event_data.event_date").isNotNull()
         & (F.trim(F.col("event_data.event_date")) != "")
     )
-    return bronze.filter(ok)
+
+
+def validate_events(bronze: DataFrame) -> DataFrame:
+    """P8 validity filter: drop rows missing artist name, venue name, or
+    event date."""
+    return bronze.filter(_is_valid_event())
 
 
 def quarantine_events(bronze: DataFrame) -> DataFrame:
     """The complement of validate_events — routed to a quarantine sink
     instead of failing the batch (replaces the reference's batch-skip
-    tolerance, /root/reference/src/loader/service.py:1101-1105)."""
-    valid = validate_events(bronze)
-    return bronze.subtract(valid)
+    tolerance, the reference's ``src/loader/service.py`` 1101-1105). Every
+    invalid row is kept, duplicates included, so the quarantine ratio
+    counts a listing scraped twice twice."""
+    return bronze.filter(~_is_valid_event())
 
 
 def build_genre_dim(bronze: DataFrame) -> DataFrame:

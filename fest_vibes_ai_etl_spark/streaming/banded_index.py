@@ -35,14 +35,20 @@ the index converges to the corpus.
 
 from __future__ import annotations
 
-import json
 import logging
 import threading
-import uuid
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .state_store import (
+    hadoop_list_names,
+    hadoop_read_json,
+    hadoop_write_json,
+    heal_swap,
+    swap_in,
+)
 
 # absolute ceiling on the band count: bands are directories, and a
 # directory per band is the price of partition pruning — 64k is already
@@ -65,6 +71,18 @@ _AUTO_BANDS_FACTOR = 8
 # per-band cost is always proportional to what the index HOLDS, not to
 # what its first batch implied.
 _MAX_AUTO_BANDS = 1024
+
+
+def _bands_for_keys(distinct: int) -> int:
+    """Band count for a write carrying ``distinct`` keys: the smallest
+    power of two ≥ 8× ``distinct``, clamped to [64, 1024] (see the
+    constants above for why the cap is low). The first append and
+    ``build_from`` both size through it."""
+    n = _MIN_AUTO_BANDS
+    while n < distinct * _AUTO_BANDS_FACTOR and n < _MAX_AUTO_BANDS:
+        n *= 2
+    return n
+
 
 # serializes the scoped parallelPartitionDiscovery.threshold raise in
 # _read_parquet_dirs (spark.conf is session-global; see there)
@@ -121,79 +139,22 @@ def _read_parquet_dirs(
     return reader.parquet(*paths)
 
 
-def hadoop_list_names(jvm, fs, path) -> list[str]:
-    """Child names of a directory in THREE py4j round-trips total. The
-    obvious ``[st.getPath().getName() for st in fs.listStatus(p)]`` pays
-    two Python↔JVM calls PER ENTRY — measured ~0.8 s for a 2048-band
-    index root, turning every pruned probe's existence filter into the
-    probe's dominant driver cost (vs ~0.1 s here). The FileStatus[] is
-    stringified JVM-side (``ArrayUtils.toString`` — the one array-joining
-    method py4j's reflection can match, since it takes a single
-    ``Object``; commons-lang3 ships with Spark) and split in Python.
-    Child names in this layout (``pband=N``/``cell_id=N``/part files)
-    never contain the ``,`` separator; a COMMA IN THE PARENT PATH would
-    corrupt the split, so that rare case falls back to the per-entry
-    walk."""
-    statuses = fs.listStatus(path)
-    if len(statuses) == 0:
-        return []
-    if "," in str(path):
-        return [st.getPath().getName() for st in statuses]
-    jpaths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
-    joined = jvm.org.apache.commons.lang3.ArrayUtils.toString(jpaths)
-    return [p.rsplit("/", 1)[-1] for p in joined[1:-1].split(",")]
-
-
-def hadoop_write_json(spark: SparkSession, path: str, obj: dict) -> None:
-    """Write ``obj`` as one JSON file through the Hadoop filesystem API
-    (works on hdfs/s3a/... exactly like the data it describes). Shared by
-    every persisted-store layout meta (the banded index, the IVF cell
-    index): underscore-prefixed names keep the file invisible to parquet
-    listings, so layout and data move as one unit through directory
-    renames.
-
-    ATOMIC via stage-then-rename: a direct create-truncate-write would
-    leave a TORN file if the driver dies mid-write, and a torn meta
-    wedges every restart (json.loads raises on each replay — the exact
-    replay-wedge class the empty-cell-dir fix closes elsewhere). A crash
-    here instead leaves either the old meta, no meta (the callers' loud
-    rebuild/adopt paths), or the staged temp (underscore-invisible,
-    clobbered by the next write). The delete-then-rename is safe here —
-    unlike the band writer's executor-side finals there is exactly one
-    driver-side writer, so no concurrent attempt can interleave."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        path + ".tmp-" + uuid.uuid4().hex
-    )
-    out = fs.create(tmp, True)
-    out.write(bytearray(json.dumps(obj).encode("utf-8")))
-    out.close()
-    if fs.exists(p):
-        fs.delete(p, False)
-    if not fs.rename(tmp, p):
-        # Hadoop rename reports failure as a boolean, not an exception —
-        # surfacing it keeps "meta missing" loud instead of mysterious
-        raise IOError(f"atomic meta write failed: rename {tmp} -> {p}")
-
-
-def hadoop_read_json(spark: SparkSession, path: str) -> dict | None:
-    """Read a JSON file written by :func:`hadoop_write_json`; None when
-    absent. py4j passes byte[] buffers BY VALUE (a Java-side read into a
-    Python bytearray never reflects back), so the read happens wholly
-    JVM-side via commons-io."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    return json.loads(text)
+def _band_census(fs, band_path) -> tuple[int, int]:
+    """``(n_files, nbytes)`` of one band directory's live parquet files.
+    ``_tmp-`` leftovers from a crashed direct append are not live data
+    (readers ignore underscore-prefixed files): they are DELETED, not
+    counted — maintain() runs between batches under the single-writer
+    rule, so any temp seen here is garbage, and without the sweep they
+    would pile up in band dirs forever."""
+    n_files = nbytes = 0
+    for f in fs.listStatus(band_path):
+        name = f.getPath().getName()
+        if name.startswith("_tmp-"):
+            fs.delete(f.getPath(), False)
+        elif name.endswith(".parquet") and not name.startswith("_"):
+            n_files += 1
+            nbytes += f.getLen()
+    return n_files, nbytes
 
 
 class BandedIndexLayoutError(RuntimeError):
@@ -233,9 +194,14 @@ class BandedFingerprintIndex:
       were derived (winnow k/w, MinHash num_hashes/bands), and an index
       over differently-derived keys answers a different question: it
       must be rebuilt, never probed;
-    - opens also heal crashed maintenance swaps before anything else, so
-      a process death inside maintain()/reband() can't leave a band (or
-      the index) invisibly stranded at a sibling path.
+    - opens also heal crashed maintenance swaps (``state_store.heal_swap``)
+      before anything else, so a process death inside maintain()/reband()
+      can't leave a band (or the index) invisibly stranded at a sibling
+      path.
+
+    Rewrites go through ``maintain`` (per fragmented band) and ``reband``
+    (whole index; ``reband(spark, idx.n_bands)`` is a same-layout
+    compaction to one file per band), both via ``state_store.swap_in``.
     """
 
     def __init__(
@@ -309,24 +275,11 @@ class BandedFingerprintIndex:
     # --- layout metadata -----------------------------------------------
     # The meta lives INSIDE the index directory (underscore-prefixed, so
     # parquet listings ignore it): layout and data then move as ONE unit
-    # through every directory rename (compaction swaps, re-banding), and
+    # through every directory rename (band swaps, re-banding), and
     # no crash window can leave data under one banding described by a
     # meta from another. Write order is always data-then-meta: a crash in
     # between leaves an index without meta, which the legacy/refuse path
     # turns into a loud rebuild — never a silent wrong probe.
-
-    def _meta_path(self, spark: SparkSession, root: str | None = None):
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            (root or self.path).rstrip("/") + "/_meta.json"
-        )
-
-    def _legacy_meta_path(self, spark: SparkSession):
-        # early round-8 builds kept the meta as a SIBLING file
-        jvm = spark._jvm
-        return jvm.org.apache.hadoop.fs.Path(
-            self.path.rstrip("/") + "_meta.json"
-        )
 
     def _write_meta(self, spark: SparkSession, root: str | None = None,
                     n_bands: int | None = None) -> None:
@@ -363,11 +316,9 @@ class BandedFingerprintIndex:
         if self._layout_checked:
             return
         fs, path = self._fs(spark)
-        jvm = spark._jvm
-        self._reband_recover(fs, jvm)
-        self._compact_recover(fs, jvm)
+        self._reband_recover(spark)
         if fs.exists(path):
-            self._band_recover(fs, jvm)
+            self._band_recover(spark)
         if not fs.exists(path):
             # nothing on disk yet: the meta is written right after the
             # data that creates the index
@@ -452,20 +403,6 @@ class BandedFingerprintIndex:
             self.schema_tag = meta.get("schema_tag")
         self._layout_checked = True
 
-    def _auto_bands(self, pairs: DataFrame) -> int:
-        """Band count derived from a frame's distinct-key count: 8×
-        headroom (bands ≫ keys is what makes probes prune), power of two,
-        clamped to [64, 1024] — the LOW initial cap is deliberate: every
-        band is a directory each append writes into and each probe
-        lists, so a key-dense first batch must not commit the index to
-        tens of thousands of directories; byte-target re-banding grows
-        the count as the index fills."""
-        distinct = pairs.select(self.key_col).distinct().count()
-        n = _MIN_AUTO_BANDS
-        while n < distinct * _AUTO_BANDS_FACTOR and n < _MAX_AUTO_BANDS:
-            n *= 2
-        return n
-
     def _resolve_bands_for_write(self, spark: SparkSession, pairs: DataFrame) -> None:
         """Fix ``n_bands`` before the first write creates the layout:
         adopt stored meta when the index exists, else derive from the
@@ -473,13 +410,16 @@ class BandedFingerprintIndex:
         self._check_layout(spark)
         if self.n_bands is not None:
             return
-        self.n_bands = self._auto_bands(pairs)
+        self.n_bands = _bands_for_keys(pairs.select(self.key_col).distinct().count())
 
     def _fs(self, spark: SparkSession):
         jvm = spark._jvm
         path = jvm.org.apache.hadoop.fs.Path(self.path)
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         return fs, path
+
+    def _sibling(self, suffix: str) -> str:
+        return self.path.rstrip("/") + suffix
 
     def _exists_raw(self, spark: SparkSession) -> bool:
         fs, path = self._fs(spark)
@@ -497,9 +437,7 @@ class BandedFingerprintIndex:
         renamed aside."""
         fs, path = self._fs(spark)
         self._check_layout(spark)
-        if not fs.exists(path):
-            return False
-        return True
+        return bool(fs.exists(path))
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         """Full index frame, or None if never written."""
@@ -695,14 +633,11 @@ class BandedFingerprintIndex:
             rows, distinct = pairs.agg(
                 F.count(F.lit(1)), F.approx_count_distinct(self.key_col)
             ).first()
-            by_keys = _MIN_AUTO_BANDS
-            while by_keys < distinct * _AUTO_BANDS_FACTOR and by_keys < _MAX_AUTO_BANDS:
-                by_keys *= 2
             target = 256 << 20  # the maintain() re-banding target
             by_bytes = _MIN_AUTO_BANDS
             while by_bytes < _MAX_BANDS and rows * 16 / by_bytes > target:
                 by_bytes *= 2
-            self.n_bands = max(by_keys, min(by_bytes, _MAX_BANDS))
+            self.n_bands = max(_bands_for_keys(distinct), min(by_bytes, _MAX_BANDS))
         (
             pairs.withColumn("pband", self.band_of(F.col(self.key_col)))
             .repartition("pband")
@@ -717,26 +652,22 @@ class BandedFingerprintIndex:
         self._reset_maintenance_state()
 
     def invalidate(self, spark: SparkSession) -> None:
-        """Delete the index, its marker, AND the compaction siblings.
+        """Delete the index, its marker, AND the swap siblings.
         Called by the streams when a batch appends to the corpus WITHOUT
         maintaining the index (scan mode): an index that silently stops
         covering the corpus would make a later bucketed run miss
         duplicates forever — absence forces the migration rebuild instead.
-        The _precompact/_compacting leftovers must die too: a stale
-        _precompact surviving invalidation would let a later compact()
-        'recover' exactly the stale index this call deleted."""
+        The swap leftovers must die too: a stale aside copy surviving
+        invalidation would let the next open 'heal' exactly the stale
+        index this call deleted back into place."""
         fs, path = self._fs(spark)
-        jvm = spark._jvm
-        for p in (
-            path,  # internal meta dies with the directory
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_precompact"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_compacting"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandold"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandtmp"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandold"),
-            jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandtmp"),
-            self._legacy_meta_path(spark),
-        ):
+        siblings = ("_meta.json", "_bandold", "_bandtmp", "_rebandold", "_rebandtmp")
+        # the in-directory meta dies with path; _meta.json here is the
+        # early round-8 SIBLING meta
+        for p in [path] + [
+            spark._jvm.org.apache.hadoop.fs.Path(self._sibling(suffix))
+            for suffix in siblings
+        ]:
             if fs.exists(p):
                 fs.delete(p, True)
         marker = self._marker_path(spark)
@@ -777,114 +708,38 @@ class BandedFingerprintIndex:
         fs, _ = self._fs(spark)
         return bool(fs.exists(self._marker_path(spark)))
 
-    def compact(self, spark: SparkSession) -> None:
-        """Rewrite the index with one file per band. Streaming appends add
-        one small file per touched band per micro-batch; over a long run a
-        band directory accumulates thousands of files and the probe's open
-        cost grows with file count, not data size. Compaction is plain
-        parquet maintenance — same rows, same banding — staged through a
-        sibling directory and swapped in atomically-enough for the
-        SINGLE-WRITER stream this index serves (run it between batches or
-        from the stream's own maintenance hook, not concurrently with a
-        probe)."""
-        fs, path = self._fs(spark)
-        jvm = spark._jvm
-        tmp = self.path.rstrip("/") + "_compacting"
-        old = self.path.rstrip("/") + "_precompact"
-        tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
-        old_path = jvm.org.apache.hadoop.fs.Path(old)
-        # recovery / refusal BEFORE doing anything destructive:
-        # a leftover _precompact means a prior compact() died between its
-        # two renames — restore it if the live index is gone, refuse (and
-        # tell the operator what's what) if both exist; renaming the live
-        # index INTO an existing _precompact dir would bury it.
-        if fs.exists(old_path):
-            if not fs.exists(path):
-                if not fs.rename(old_path, path):
-                    raise RuntimeError(
-                        f"compact recovery: rename {old} -> {self.path} failed"
-                    )
-            else:
-                raise RuntimeError(
-                    f"refusing to compact: {old} exists from a crashed "
-                    f"compaction alongside a live index at {self.path} — "
-                    f"verify which is current and delete the other first"
-                )
-        if fs.exists(tmp_path):
-            fs.delete(tmp_path, True)  # stale staging from a prior crash
-        df = self.read(spark)
-        if df is None:
-            return
-        (
-            df.repartition("pband")
-            .write.mode("overwrite")
-            .partitionBy("pband")
-            .parquet(tmp)
-        )
-        # the staged copy carries its own meta so the swap moves layout
-        # and data as one unit
-        self._write_meta(spark, root=tmp)
-        if not fs.rename(path, old_path):
-            raise RuntimeError(f"compact: rename {self.path} -> {old} failed")
-        if not fs.rename(tmp_path, path):
-            # put the original back before failing — and say so loudly if
-            # even that fails: the live index is then stranded at
-            # _precompact, which the operator must know
-            restored = fs.rename(old_path, path)
-            raise RuntimeError(
-                f"compact: rename {tmp} -> {self.path} failed"
-                + (
-                    ""
-                    if restored
-                    else f"; ROLLBACK ALSO FAILED — live index stranded at "
-                    f"{old}, restore it manually before the next probe"
-                )
-            )
-        fs.delete(old_path, True)
-        # whole-index rewrite: byte sizes changed everywhere; re-learn on
-        # the next maintain() tick
-        self._reset_maintenance_state()
-
     # --- per-band maintenance ------------------------------------------
-    # compact() rewrites the WHOLE index — right for a one-off cleanup,
-    # wrong as a recurring hook: a long-running stream fragments only the
-    # bands it touches, and rewriting terabytes of untouched bands to fix
-    # a few fragmented ones is the kind of maintenance cost that scales
-    # with index size instead of batch size. maintain() compacts ONLY
-    # bands whose file count crossed the threshold; untouched bands keep
-    # their exact files (byte-identical, never rewritten).
+    # A long-running stream fragments only the bands it touches, and
+    # rewriting terabytes of untouched bands to fix a few fragmented ones
+    # is the kind of maintenance cost that scales with index size instead
+    # of batch size. maintain() compacts ONLY bands whose file count
+    # crossed the threshold; untouched bands keep their exact files
+    # (byte-identical, never rewritten). Each rewritten band goes through
+    # the shared staged swap (``state_store.swap_in``) with
+    # ``<index>_bandtmp/pband=B`` as staging and ``<index>_bandold/pband=B``
+    # as the aside copy.
 
-    def _band_recover(self, fs, jvm) -> None:
-        """Heal a crashed per-band swap before doing anything else. The
-        swap order (stage fully → rename band out → rename staged in →
-        delete old) means a leftover ``_bandold/pband=B`` is either the
-        live copy (root band missing: restore it) or a superseded old
-        copy (root band present — and COMPLETE, because the staged
-        replacement was fully written before any rename: delete it)."""
-        old_root = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandold")
-        tmp_root = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_bandtmp")
-        if fs.exists(old_root) or fs.exists(tmp_root):
-            # a crashed swap means the on-disk state diverged from this
-            # instance's dirty/byte bookkeeping — re-learn it on the next
-            # maintain() with one full walk
+    def _band_recover(self, spark: SparkSession) -> None:
+        """Heal crashed per-band swaps (``state_store.heal_swap`` per band
+        left under ``_bandold``), then drop the emptied staging roots.
+        Runs only while the live root exists, so the root-level heal can
+        only delete. A crashed swap means the on-disk state diverged from
+        this instance's dirty/byte bookkeeping — re-learn it on the next
+        maintain() with one full walk."""
+        fs, _ = self._fs(spark)
+        old_root, tmp_root = self._sibling("_bandold"), self._sibling("_bandtmp")
+        old_p = spark._jvm.org.apache.hadoop.fs.Path(old_root)
+        if fs.exists(old_p):
+            for name in hadoop_list_names(spark._jvm, fs, old_p):
+                if name.startswith("pband="):
+                    heal_swap(
+                        spark,
+                        f"{self.path}/{name}",
+                        f"{tmp_root}/{name}",
+                        f"{old_root}/{name}",
+                    )
+        if heal_swap(spark, self.path, tmp_root, old_root):
             self._reset_maintenance_state()
-        if fs.exists(old_root):
-            for st in fs.listStatus(old_root):
-                name = st.getPath().getName()
-                if not name.startswith("pband="):
-                    continue
-                live = jvm.org.apache.hadoop.fs.Path(self.path + "/" + name)
-                if not fs.exists(live):
-                    if not fs.rename(st.getPath(), live):
-                        raise RuntimeError(
-                            f"maintain recovery: rename {st.getPath()} -> "
-                            f"{live} failed"
-                        )
-                else:
-                    fs.delete(st.getPath(), True)
-            fs.delete(old_root, True)
-        if fs.exists(tmp_root):
-            fs.delete(tmp_root, True)  # staging is always safe to drop
 
     def maintain(
         self,
@@ -901,10 +756,10 @@ class BandedFingerprintIndex:
         per-band compaction). Streaming appends add one small file
         per touched band per micro-batch, so probe open-cost grows with
         file count; this hook (called by the streams between batches)
-        bounds it without compact()'s full-index rewrite. Single-writer
+        bounds it without rewriting untouched bands. Single-writer
         discipline applies: run between batches, never concurrently with
-        a probe or append. Crash-safe via the stage/swap in
-        ``_band_recover``.
+        a probe or append. Crash-safe via the shared staged swap
+        (``state_store.swap_in``), healed at open by ``_band_recover``.
 
         ``target_band_bytes`` is the re-banding trigger: when the AVERAGE
         band outgrows it (the corpus grew far past the size n_bands was
@@ -939,68 +794,33 @@ class BandedFingerprintIndex:
         # recovery BEFORE the existence check: a crashed re-band can leave
         # the live directory itself missing (its content is at _rebandtmp/
         # _rebandold), and an early return here would strand it
-        self._reband_recover(fs, jvm)
+        self._reband_recover(spark)
         if not fs.exists(root):
             return 0
         self._check_layout(spark)
-        self._band_recover(fs, jvm)
+        self._band_recover(spark)
         full_walk = self._dirty_bands is None or self._band_bytes is None
         self.last_maintain_walk = "full" if full_walk else "dirty"
-        fragmented: list[str] = []
         if full_walk:
             self._band_bytes = {}
-            inspected = []
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if not name.startswith("pband="):
-                    continue
-                band = int(name.split("=", 1)[1])
-                inspected.append(band)
-                n_files = 0
-                nbytes = 0
-                for f in fs.listStatus(st.getPath()):
-                    name_f = f.getPath().getName()
-                    # _tmp- leftovers from a crashed direct append are
-                    # not live data (readers ignore underscore-prefixed
-                    # files): don't count them, DELETE them — maintain()
-                    # runs between batches under the single-writer rule,
-                    # so any temp seen here is garbage, and without the
-                    # sweep they would pile up in band dirs forever
-                    if name_f.startswith("_tmp-"):
-                        fs.delete(f.getPath(), False)
-                        continue
-                    if name_f.endswith(".parquet") and not name_f.startswith("_"):
-                        n_files += 1
-                        nbytes += f.getLen()
-                self._band_bytes[band] = nbytes
-                if n_files > max_files_per_band:
-                    fragmented.append(name)
-            self.last_maintain_inspected = sorted(inspected)
+            bands = sorted(
+                int(name.split("=", 1)[1])
+                for name in hadoop_list_names(jvm, fs, root)
+                if name.startswith("pband=")
+            )
         else:
-            self.last_maintain_inspected = sorted(self._dirty_bands)
-            for band in self.last_maintain_inspected:
-                band_path = jvm.org.apache.hadoop.fs.Path(
-                    f"{self.path}/pband={band}"
-                )
-                if not fs.exists(band_path):
-                    # touched sets are supersets of the bands actually
-                    # written (probe keys include rows later filtered out)
-                    continue
-                n_files = 0
-                nbytes = 0
-                for f in fs.listStatus(band_path):
-                    name_f = f.getPath().getName()
-                    if name_f.startswith("_tmp-"):
-                        # crashed-append staging garbage: sweep (see the
-                        # full-walk branch for why this is safe here)
-                        fs.delete(f.getPath(), False)
-                        continue
-                    if name_f.endswith(".parquet") and not name_f.startswith("_"):
-                        n_files += 1
-                        nbytes += f.getLen()
-                self._band_bytes[band] = nbytes
-                if n_files > max_files_per_band:
-                    fragmented.append(f"pband={band}")
+            bands = sorted(self._dirty_bands)
+        self.last_maintain_inspected = bands
+        fragmented: list[int] = []
+        for band in bands:
+            band_path = jvm.org.apache.hadoop.fs.Path(f"{self.path}/pband={band}")
+            if not full_walk and not fs.exists(band_path):
+                # touched sets are supersets of the bands actually
+                # written (probe keys include rows later filtered out)
+                continue
+            n_files, self._band_bytes[band] = _band_census(fs, band_path)
+            if n_files > max_files_per_band:
+                fragmented.append(band)
         self._dirty_bands = set()
         total_bytes = sum(self._band_bytes.values())
         if (
@@ -1019,12 +839,11 @@ class BandedFingerprintIndex:
             return self.n_bands  # reband subsumes per-band compaction
         if not fragmented:
             return 0
-        tmp_root = self.path.rstrip("/") + "_bandtmp"
-        old_root = self.path.rstrip("/") + "_bandold"
+        tmp_root, old_root = self._sibling("_bandtmp"), self._sibling("_bandold")
         fs.mkdirs(jvm.org.apache.hadoop.fs.Path(old_root))
-        for name in fragmented:
-            band_dir = self.path + "/" + name
-            staged = tmp_root + "/" + name
+        for band in fragmented:
+            name = f"pband={band}"
+            band_dir = f"{self.path}/{name}"
             # band files store no partition column (partitionBy strips
             # it), so a plain dir read + rewrite reproduces the layout
             band_df = spark.read.parquet(band_dir)
@@ -1032,33 +851,20 @@ class BandedFingerprintIndex:
                 # the exclude frame carries its own broadcast hint (or not
                 # — read_tombstones' bounded-broadcast escape decides)
                 band_df = band_df.join(exclude, exclude_cols, "left_anti")
-            band_df.coalesce(1).write.mode("overwrite").parquet(staged)
-            live = jvm.org.apache.hadoop.fs.Path(band_dir)
-            old = jvm.org.apache.hadoop.fs.Path(old_root + "/" + name)
-            stg = jvm.org.apache.hadoop.fs.Path(staged)
-            if not fs.rename(live, old):
-                raise RuntimeError(f"maintain: rename {band_dir} -> {old} failed")
-            if not fs.rename(stg, live):
-                restored = fs.rename(old, live)
-                raise RuntimeError(
-                    f"maintain: rename {staged} -> {band_dir} failed"
-                    + (
-                        ""
-                        if restored
-                        else f"; ROLLBACK ALSO FAILED — band stranded at "
-                        f"{old}, restore it manually before the next probe"
-                    )
-                )
-            fs.delete(old, True)
+            band_df.coalesce(1).write.mode("overwrite").parquet(f"{tmp_root}/{name}")
+            swap_in(
+                spark,
+                band_dir,
+                f"{tmp_root}/{name}",
+                f"{old_root}/{name}",
+                f"maintain {band_dir}",
+            )
             # refresh the byte cache for the rewritten band (compaction
             # changes encoded size) so the re-band trigger's running
             # total stays exact without any extra walk
-            nbytes = 0
-            for f in fs.listStatus(live):
-                name_f = f.getPath().getName()
-                if name_f.endswith(".parquet") and not name_f.startswith("_"):
-                    nbytes += f.getLen()
-            self._band_bytes[int(name.split("=", 1)[1])] = nbytes
+            _, self._band_bytes[band] = _band_census(
+                fs, jvm.org.apache.hadoop.fs.Path(band_dir)
+            )
         fs.delete(jvm.org.apache.hadoop.fs.Path(old_root), True)
         fs.delete(jvm.org.apache.hadoop.fs.Path(tmp_root), True)
         return len(fragmented)
@@ -1076,66 +882,19 @@ class BandedFingerprintIndex:
     # the average band size on the listing walk it already does and
     # triggers the re-band between batches.
 
-    def _reband_recover(self, fs, jvm) -> None:
-        """Heal a crashed re-band. Order (stage fully under the NEW
-        banding, meta inside → rename live out → rename staged in →
-        delete old) means: a leftover ``_rebandold`` with the live index
-        missing is a crash between the renames — the staged copy is
-        COMPLETE (it was fully written, meta included, before any
-        rename), so promote it; with the live index present the old copy
-        is superseded — delete it. A leftover ``_rebandtmp`` alone is a
-        crash before the swap started: the live index is untouched, drop
-        the staging."""
-        old_p = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandold")
-        tmp_p = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_rebandtmp")
-        live = jvm.org.apache.hadoop.fs.Path(self.path)
-        promoted = False
-        if fs.exists(old_p) or fs.exists(tmp_p):
-            # crashed-swap healing invalidates the dirty/byte bookkeeping
+    def _reband_recover(self, spark: SparkSession) -> None:
+        """Heal a crashed re-band through ``state_store.heal_swap``
+        (staging ``_rebandtmp``, aside copy ``_rebandold``). The staged
+        copy is written in full under the NEW banding, meta inside,
+        before any rename, so a promoted copy's own meta is authoritative:
+        any heal drops the cached layout and dirty/byte bookkeeping, and
+        the next open re-adopts both from disk."""
+        if heal_swap(
+            spark, self.path, self._sibling("_rebandtmp"), self._sibling("_rebandold")
+        ):
             self._reset_maintenance_state()
-        if fs.exists(old_p):
-            if not fs.exists(live):
-                src = tmp_p if fs.exists(tmp_p) else old_p
-                if not fs.rename(src, live):
-                    raise RuntimeError(
-                        f"reband recovery: rename {src} -> {self.path} failed"
-                    )
-                promoted = True
-            if fs.exists(old_p):
-                fs.delete(old_p, True)
-        if fs.exists(tmp_p):
-            fs.delete(tmp_p, True)
-        if promoted:
-            # the promoted copy's own meta (it carries one — staging
-            # writes data + meta before any rename) is authoritative:
-            # drop the cached view and re-adopt it on the next open
             self._layout_checked = False
-            self.n_bands = None
-
-    def _compact_recover(self, fs, jvm) -> None:
-        """Open-time heal for compact()'s crash window: a death between
-        its two renames leaves the live index complete at ``_precompact``
-        — without this, ``exists()`` reports the index gone and the
-        stream pays a full silent rebuild, and the stale ``_precompact``
-        then poisons every later compact() with its both-exist refusal.
-        Only the unambiguous case is healed here (live missing → restore
-        the old copy, drop the possibly-partial staging); live-and-
-        ``_precompact``-both-present stays compact()'s loud refusal —
-        that state can also be an operator's manual copy, and deleting
-        either side on open would be guessing."""
-        old_p = jvm.org.apache.hadoop.fs.Path(self.path.rstrip("/") + "_precompact")
-        live = jvm.org.apache.hadoop.fs.Path(self.path)
-        if fs.exists(old_p) and not fs.exists(live):
-            self._reset_maintenance_state()
-            if not fs.rename(old_p, live):
-                raise RuntimeError(
-                    f"compact recovery: rename {old_p} -> {self.path} failed"
-                )
-            tmp_p = jvm.org.apache.hadoop.fs.Path(
-                self.path.rstrip("/") + "_compacting"
-            )
-            if fs.exists(tmp_p):
-                fs.delete(tmp_p, True)
+            self.n_bands = self._ctor_n_bands
 
     def reband(
         self,
@@ -1150,9 +909,8 @@ class BandedFingerprintIndex:
         rewrite (see ``maintain``). Single-writer discipline: between
         batches only."""
         fs, path = self._fs(spark)
-        jvm = spark._jvm
         self._check_layout(spark)
-        self._reband_recover(fs, jvm)
+        self._reband_recover(spark)
         if not fs.exists(path):
             return
         df = self.read(spark)
@@ -1160,8 +918,7 @@ class BandedFingerprintIndex:
             return
         if exclude is not None:
             df = df.join(exclude, exclude_cols, "left_anti")
-        tmp = self.path.rstrip("/") + "_rebandtmp"
-        old = self.path.rstrip("/") + "_rebandold"
+        tmp = self._sibling("_rebandtmp")
         (
             df.drop("pband")
             .withColumn(
@@ -1174,22 +931,9 @@ class BandedFingerprintIndex:
             .parquet(tmp)
         )
         self._write_meta(spark, root=tmp, n_bands=n_bands_new)
-        old_p = jvm.org.apache.hadoop.fs.Path(old)
-        tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-        if not fs.rename(path, old_p):
-            raise RuntimeError(f"reband: rename {self.path} -> {old} failed")
-        if not fs.rename(tmp_p, path):
-            restored = fs.rename(old_p, path)
-            raise RuntimeError(
-                f"reband: rename {tmp} -> {self.path} failed"
-                + (
-                    ""
-                    if restored
-                    else f"; ROLLBACK ALSO FAILED — live index stranded at "
-                    f"{old}, restore it manually before the next probe"
-                )
-            )
-        fs.delete(old_p, True)
+        swap_in(
+            spark, self.path, tmp, self._sibling("_rebandold"), f"reband {self.path}"
+        )
         self.n_bands = n_bands_new
         # every band was rewritten under the new modulus: the old dirty
         # set and byte cache describe a layout that no longer exists

@@ -96,12 +96,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .banded_index import (
-    BandedFingerprintIndex,
-    direct_partitioned_append,
-    hadoop_read_json,
-)
+from .banded_index import BandedFingerprintIndex, direct_partitioned_append
 from ._exact_guard import _settle_indexes
+from .state_store import hadoop_read_json
 from .writer_lease import fenced
 
 _META = "_meta.json"
@@ -289,7 +286,7 @@ def load_index_meta(spark, index_dir: str) -> dict:
 def _postings_bucket_dirs(spark, index_dir: str) -> list[str]:
     """Existing ``tb=`` bucket directory paths under the postings store
     (one root readdir; [] when the store was never written)."""
-    from .banded_index import hadoop_list_names
+    from .state_store import hadoop_list_names
 
     jvm = spark._jvm
     pdir = _postings_dir(index_dir)
@@ -368,7 +365,7 @@ def _live_bucket_paths(
         jp = jvm.org.apache.hadoop.fs.Path(root_dir)
         fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
         if fs.exists(jp):
-            from .banded_index import hadoop_list_names
+            from .state_store import hadoop_list_names
 
             existing = set(hadoop_list_names(jvm, fs, jp))
             for name in unknown:
@@ -431,7 +428,7 @@ def settle_forward_index(
     from pyspark.errors import AnalysisException
 
     from ..errors import is_missing_or_dataless
-    from .banded_index import hadoop_write_json
+    from .state_store import hadoop_write_json
 
     meta = load_index_meta(spark, index_dir)
     id_col = meta["id_col"]
@@ -1325,7 +1322,7 @@ def maintain_search_index(
     if meta is not None and "n_doc_buckets" in meta:
         fdir = _forward_dir(index_dir)
         if forward_buckets is None:
-            from .banded_index import hadoop_list_names
+            from .state_store import hadoop_list_names
 
             jvm = spark._jvm
             jfp = jvm.org.apache.hadoop.fs.Path(fdir)

@@ -7,6 +7,11 @@ the same operational contract (documented in ``STATE.md``); this module
 holds the pieces that are genuinely identical across families so the next
 family doesn't re-derive them:
 
+- **Hadoop filesystem helpers** (:func:`hadoop_write_json` /
+  :func:`hadoop_read_json` / :func:`hadoop_list_names`): every layout meta
+  and journal is one small JSON file written through the same Hadoop
+  filesystem as the data it describes, atomically (stage + rename).
+
 - **Layout meta guard** (:func:`adopt_or_refuse_meta` /
   :func:`meta_mismatches`): every store pins its layout parameters in an
   in-directory ``_meta.json`` (underscore-prefixed: invisible to parquet
@@ -16,6 +21,13 @@ family doesn't re-derive them:
   three families close. Families with richer adoption semantics (the
   banded index's stored-n_bands-always-wins, the IVF sample re-assignment
   verify) keep those locally and share only the mismatch computation.
+
+- **Staged directory swap** (:func:`swap_in` / :func:`heal_swap`): every
+  whole-directory rewrite (a banded index's per-band maintenance and
+  re-banding, the tombstone revoke, the corpus purge) writes the new
+  directory in full under a staging path, renames the live one aside,
+  renames the staged one in, then deletes the aside copy. The owner heals
+  a crash in any of those windows at open time with :func:`heal_swap`.
 
 - **Small-file compaction for append-per-batch directories**
   (:func:`compact_small_files` / :func:`recover_dir_compaction`): a
@@ -37,25 +49,165 @@ family doesn't re-derive them:
   A crash before (3) rolls BACK (inputs intact, staging swept); a crash
   after (3) rolls FORWARD (final is live, surviving inputs deleted).
   Between the crash and recovery a raw reader could see final+inputs
-  simultaneously — the same single-writer discipline as the banded
-  index's swaps applies: owners run :func:`recover_dir_compaction` at
-  open time (the stream processors and probes here do), and maintenance
-  never runs concurrently with a probe.
+  simultaneously — the same single-writer discipline as the staged swap
+  applies: owners run :func:`recover_dir_compaction` at open time (the
+  stream processors and probes here do), and maintenance never runs
+  concurrently with a probe.
 """
 
 from __future__ import annotations
 
+import json
 import logging
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .banded_index import hadoop_read_json, hadoop_write_json
-
 _MANIFEST = "_compact.json"
 _STAGE_PREFIX = "_cstage-"
 
 logger = logging.getLogger(__name__)
+
+
+# --- Hadoop filesystem helpers --------------------------------------------
+
+
+def _fs_for(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    jp = jvm.org.apache.hadoop.fs.Path(path)
+    return jvm, jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
+
+
+def hadoop_list_names(jvm, fs, path) -> list[str]:
+    """Child names of a directory in THREE py4j round-trips total. The
+    obvious ``[st.getPath().getName() for st in fs.listStatus(p)]`` pays
+    two Python↔JVM calls PER ENTRY — measured ~0.8 s for a 2048-band
+    index root, turning every pruned probe's existence filter into the
+    probe's dominant driver cost (vs ~0.1 s here). The FileStatus[] is
+    stringified JVM-side (``ArrayUtils.toString`` — the one array-joining
+    method py4j's reflection can match, since it takes a single
+    ``Object``; commons-lang3 ships with Spark) and split in Python.
+    Child names in this layout (``pband=N``/``cell_id=N``/part files)
+    never contain the ``,`` separator; a COMMA IN THE PARENT PATH would
+    corrupt the split, so that rare case falls back to the per-entry
+    walk."""
+    statuses = fs.listStatus(path)
+    if len(statuses) == 0:
+        return []
+    if "," in str(path):
+        return [st.getPath().getName() for st in statuses]
+    jpaths = jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses)
+    joined = jvm.org.apache.commons.lang3.ArrayUtils.toString(jpaths)
+    return [p.rsplit("/", 1)[-1] for p in joined[1:-1].split(",")]
+
+
+def hadoop_write_json(spark: SparkSession, path: str, obj: dict) -> None:
+    """Write ``obj`` as one JSON file through the Hadoop filesystem API
+    (works on hdfs/s3a/... exactly like the data it describes). Shared by
+    every persisted-store layout meta and journal: underscore-prefixed
+    names keep the file invisible to parquet listings, so layout and data
+    move as one unit through directory renames.
+
+    ATOMIC via stage-then-rename: a direct create-truncate-write would
+    leave a TORN file if the driver dies mid-write, and a torn meta
+    wedges every restart (json.loads raises on each replay — the exact
+    replay-wedge class the empty-cell-dir fix closes elsewhere). A crash
+    here instead leaves either the old meta, no meta (the callers' loud
+    rebuild/adopt paths), or the staged temp (underscore-invisible,
+    clobbered by the next write). The delete-then-rename is safe here —
+    unlike the band writer's executor-side finals there is exactly one
+    driver-side writer, so no concurrent attempt can interleave."""
+    jvm, fs, p = _fs_for(spark, path)
+    tmp = jvm.org.apache.hadoop.fs.Path(path + ".tmp-" + uuid.uuid4().hex)
+    out = fs.create(tmp, True)
+    out.write(bytearray(json.dumps(obj).encode("utf-8")))
+    out.close()
+    if fs.exists(p):
+        fs.delete(p, False)
+    if not fs.rename(tmp, p):
+        # Hadoop rename reports failure as a boolean, not an exception —
+        # surfacing it keeps "meta missing" loud instead of mysterious
+        raise IOError(f"atomic meta write failed: rename {tmp} -> {p}")
+
+
+def hadoop_read_json(spark: SparkSession, path: str) -> dict | None:
+    """Read a JSON file written by :func:`hadoop_write_json`; None when
+    absent. py4j passes byte[] buffers BY VALUE (a Java-side read into a
+    Python bytearray never reflects back), so the read happens wholly
+    JVM-side via commons-io."""
+    jvm, fs, p = _fs_for(spark, path)
+    if not fs.exists(p):
+        return None
+    stream = fs.open(p)
+    try:
+        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
+    return json.loads(text)
+
+
+# --- staged directory swap -------------------------------------------------
+
+
+def swap_in(
+    spark: SparkSession, live: str, staged: str, aside: str, what: str
+) -> None:
+    """Replace the directory ``live`` with the FULLY WRITTEN directory
+    ``staged``: rename ``live`` to ``aside``, ``staged`` to ``live``,
+    then delete ``aside``. If the second rename fails the aside copy is
+    renamed back before raising, and the error says so loudly when even
+    that fails. ``what`` prefixes the messages (operation and store).
+    A crash between any two steps is healed by :func:`heal_swap` on the
+    same three paths. Single-writer discipline: run between batches,
+    never concurrently with a probe of the same store."""
+    jvm, fs, live_p = _fs_for(spark, live)
+    staged_p = jvm.org.apache.hadoop.fs.Path(staged)
+    aside_p = jvm.org.apache.hadoop.fs.Path(aside)
+    if not fs.rename(live_p, aside_p):
+        raise RuntimeError(f"{what}: rename {live} -> {aside} failed")
+    err = None
+    try:
+        moved = fs.rename(staged_p, live_p)
+    except Exception as exc:  # noqa: BLE001 - py4j-wrapped IOException
+        moved, err = False, exc
+    if not moved:
+        restored = fs.rename(aside_p, live_p)
+        raise RuntimeError(
+            f"{what}: rename {staged} -> {live} failed"
+            + (
+                ""
+                if restored
+                else f"; ROLLBACK ALSO FAILED — the live copy is stranded "
+                f"at {aside}, restore it manually before the next batch"
+            )
+        ) from err
+    fs.delete(aside_p, True)
+
+
+def heal_swap(spark: SparkSession, live: str, staged: str, aside: str) -> bool:
+    """Heal a crashed :func:`swap_in`; returns True when any leftover was
+    found. ``staged`` is written in full before the first rename, so an
+    ``aside`` copy with ``live`` missing is a crash between the renames:
+    promote ``staged`` (complete), or restore ``aside`` when staging is
+    gone too. Any ``aside`` left next to a live directory is superseded,
+    and ``staged`` alone is a crash before the swap began (``live`` is
+    untouched): both are deleted. Two stats in the steady state."""
+    jvm, fs, live_p = _fs_for(spark, live)
+    staged_p = jvm.org.apache.hadoop.fs.Path(staged)
+    aside_p = jvm.org.apache.hadoop.fs.Path(aside)
+    found = False
+    if fs.exists(aside_p):
+        found = True
+        if not fs.exists(live_p):
+            src = staged_p if fs.exists(staged_p) else aside_p
+            if not fs.rename(src, live_p):
+                raise RuntimeError(f"swap recovery: rename {src} -> {live} failed")
+        if fs.exists(aside_p):
+            fs.delete(aside_p, True)
+    if fs.exists(staged_p):
+        found = True
+        fs.delete(staged_p, True)
+    return found
 
 
 class InFlightRecoveryError(RuntimeError):
@@ -139,12 +291,6 @@ def adopt_or_refuse_meta(
 
 
 # --- per-directory small-file compaction ------------------------------------
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jp.getFileSystem(spark._jsc.hadoopConfiguration()), jp
 
 
 def _gone_race(fs, path) -> bool:

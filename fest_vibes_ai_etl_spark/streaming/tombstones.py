@@ -24,9 +24,10 @@ lakehouse corpus has no row-level delete, so erasure is two-phase:
      rewrites (``BandedFingerprintIndex.maintain(exclude=...)``).
 
 2. **Purge** (:func:`purge_corpus_tombstones`): rewrite the corpus
-   without the tombstoned ids — staged + swapped exactly like the banded
-   index's re-banding (stage fully → rename live out → rename staged in
-   → delete old), healed at every stream open via :func:`purge_recover`.
+   without the tombstoned ids — staged + swapped through the stores'
+   shared ``state_store.swap_in`` (stage fully → rename live out → rename
+   staged in → delete old), healed at every stream open via
+   :func:`purge_recover`.
    Sidecars need no rebuild: their stale rows for purged ids are hidden
    by the probes' anti-join and folded out lazily by maintenance. By
    default the tombstone set is KEPT after the purge (a suppression
@@ -55,6 +56,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state_store import (
+    InFlightRecoveryError,
+    heal_swap,
+    recover_dir_compaction,
+    swap_in,
+)
 from .writer_lease import fenced
 
 # The dedup families' fingerprint for NULL text (incremental_dedup's
@@ -108,8 +115,6 @@ def read_tombstones(
     # live dir renamed out) costs a stat here
     if fs.exists(jvm.org.apache.hadoop.fs.Path(tdir + "_unold")):
         if heal == "detect":
-            from .state_store import InFlightRecoveryError
-
             raise InFlightRecoveryError(
                 f"tombstone set at {tdir}: crashed revoke swap "
                 f"({tdir}_unold present) — read-only consumers must not "
@@ -235,26 +240,10 @@ def delete_from_dedup_corpus(
 
 
 def _untomb_recover(spark: SparkSession, store_dir: str) -> None:
-    """Heal a crashed :func:`remove_tombstones` swap (same shape as the
-    purge swap: stage fully → rename live out → rename staged in →
-    delete old)."""
-    jvm = spark._jvm
+    """Heal a crashed :func:`remove_tombstones` swap (``_untmp`` staging,
+    ``_unold`` aside copy; see ``state_store.heal_swap``)."""
     tdir = tombstones_path(store_dir)
-    live = jvm.org.apache.hadoop.fs.Path(tdir)
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    old_p = jvm.org.apache.hadoop.fs.Path(tdir + "_unold")
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tdir + "_untmp")
-    if fs.exists(old_p):
-        if not fs.exists(live):
-            src = tmp_p if fs.exists(tmp_p) else old_p
-            if not fs.rename(src, live):
-                raise RuntimeError(
-                    f"tombstone-revoke recovery: rename {src} -> {tdir} failed"
-                )
-        if fs.exists(old_p):
-            fs.delete(old_p, True)
-    if fs.exists(tmp_p):
-        fs.delete(tmp_p, True)
+    heal_swap(spark, tdir, tdir + "_untmp", tdir + "_unold")
 
 
 @fenced("untomb")
@@ -285,8 +274,6 @@ def remove_tombstones(
     _untomb_recover(spark, store_dir)
     if not fs.exists(live):
         return 0
-    from .state_store import recover_dir_compaction
-
     # heal a crashed maintain_tombstones merge before swap-rewriting the
     # directory (the swap would otherwise strand its journal manifest)
     recover_dir_compaction(spark, tdir)
@@ -308,19 +295,10 @@ def remove_tombstones(
     if remaining.isEmpty():
         fs.delete(live, True)
         return int(doomed)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tdir + "_untmp")
-    old_p = jvm.org.apache.hadoop.fs.Path(tdir + "_unold")
     remaining.coalesce(1).write.mode("overwrite").parquet(tdir + "_untmp")
-    if not fs.rename(live, old_p):
-        raise RuntimeError(f"tombstone revoke: rename {tdir} -> _unold failed")
-    if not fs.rename(tmp_p, live):
-        restored = fs.rename(old_p, live)
-        raise RuntimeError(
-            f"tombstone revoke: rename _untmp -> {tdir} failed"
-            + ("" if restored else "; ROLLBACK ALSO FAILED — tombstones "
-               f"stranded at {tdir}_unold")
-        )
-    fs.delete(old_p, True)
+    swap_in(
+        spark, tdir, tdir + "_untmp", tdir + "_unold", f"tombstone revoke {tdir}"
+    )
     return int(doomed)
 
 
@@ -341,31 +319,14 @@ def read_dedup_corpus(
 
 
 def purge_recover(spark: SparkSession, corpus_dir: str) -> None:
-    """Heal a crashed :func:`purge_corpus_tombstones` swap. Stage order
-    (stage fully → rename live out → rename staged in → delete old)
-    means: ``_prepurge`` present with the live corpus missing is a crash
-    between the renames — the staged copy is COMPLETE, promote it (or
-    restore the old copy if staging is also gone); live present means the
-    old copy is superseded — delete it. Stream processors run this at
-    open (one stat in the steady state): without it a crash inside the
-    swap would read as 'corpus deleted', invalidating the sidecars and
-    silently restarting the corpus from empty."""
-    jvm = spark._jvm
-    live = jvm.org.apache.hadoop.fs.Path(corpus_dir)
-    fs = live.getFileSystem(spark._jsc.hadoopConfiguration())
-    old_p = jvm.org.apache.hadoop.fs.Path(corpus_dir.rstrip("/") + "_prepurge")
-    tmp_p = jvm.org.apache.hadoop.fs.Path(corpus_dir.rstrip("/") + "_purgetmp")
-    if fs.exists(old_p):
-        if not fs.exists(live):
-            src = tmp_p if fs.exists(tmp_p) else old_p
-            if not fs.rename(src, live):
-                raise RuntimeError(
-                    f"purge recovery: rename {src} -> {corpus_dir} failed"
-                )
-        if fs.exists(old_p):
-            fs.delete(old_p, True)
-    if fs.exists(tmp_p):
-        fs.delete(tmp_p, True)  # staging alone: live untouched, drop it
+    """Heal a crashed :func:`purge_corpus_tombstones` swap (``_purgetmp``
+    staging, ``_prepurge`` aside copy; see ``state_store.heal_swap``).
+    Stream processors run this at open (two stats in the steady state):
+    without it a crash inside the swap would read as 'corpus deleted',
+    invalidating the sidecars and silently restarting the corpus from
+    empty."""
+    base = corpus_dir.rstrip("/")
+    heal_swap(spark, corpus_dir, base + "_purgetmp", base + "_prepurge")
 
 
 @fenced("purge")
@@ -408,7 +369,6 @@ def purge_corpus_tombstones(
         return 0
     kept = corpus.join(ids, id_col, "left_anti")
     tmp = corpus_dir.rstrip("/") + "_purgetmp"
-    old = corpus_dir.rstrip("/") + "_prepurge"
     # FULL erasure must still leave a READABLE corpus: an empty frame
     # written at its natural parallelism produces a dataless directory
     # (zero part files), which the processors deliberately treat as fatal
@@ -419,22 +379,8 @@ def purge_corpus_tombstones(
     (kept.coalesce(1) if kept.isEmpty() else kept).write.mode(
         "overwrite"
     ).parquet(tmp)
-    old_p = jvm.org.apache.hadoop.fs.Path(old)
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    if not fs.rename(live, old_p):
-        raise RuntimeError(f"purge: rename {corpus_dir} -> {old} failed")
-    if not fs.rename(tmp_p, live):
-        restored = fs.rename(old_p, live)
-        raise RuntimeError(
-            f"purge: rename {tmp} -> {corpus_dir} failed"
-            + (
-                ""
-                if restored
-                else f"; ROLLBACK ALSO FAILED — corpus stranded at {old}, "
-                f"restore it manually before the next batch"
-            )
-        )
-    fs.delete(old_p, True)
+    old = corpus_dir.rstrip("/") + "_prepurge"
+    swap_in(spark, corpus_dir, tmp, old, f"purge {corpus_dir}")
     if clear:
         fs.delete(jvm.org.apache.hadoop.fs.Path(tombstones_path(corpus_dir)), True)
     return doomed

@@ -86,7 +86,9 @@ def test_index_roundtrip_prunes_partitions(spark, tmp_path):
     }
 
 
-def test_index_compaction_preserves_rows_and_reduces_files(spark, tmp_path):
+def test_same_n_reband_preserves_rows_and_reduces_files(spark, tmp_path):
+    """Re-banding under the index's own n_bands is the whole-index
+    compaction: one file per band, same rows, same layout."""
     idx = BandedFingerprintIndex(str(tmp_path / "idx"), "fp", n_bands=4)
     for batch in range(5):  # streaming shape: one small file per band per batch
         idx.append(
@@ -104,33 +106,12 @@ def test_index_compaction_preserves_rows_and_reduces_files(spark, tmp_path):
 
     files_before = n_files()
     assert files_before >= 20  # 5 appends x 4 bands
-    idx.compact(spark)
+    idx.reband(spark, idx.n_bands)
     assert n_files() <= 4  # one file per band
     after = {(r.id, r.fp) for r in spark.read.parquet(str(tmp_path / "idx")).select("id", "fp").collect()}
     assert after == before
     # pruned reads still work post-compaction
     assert idx.read_bands(spark, [0]).count() > 0
-
-
-def test_index_compaction_crash_recovery_and_refusal(spark, tmp_path):
-    import shutil
-
-    import pytest
-
-    base = str(tmp_path / "idx")
-    idx = BandedFingerprintIndex(base, "fp", n_bands=4)
-    idx.append(spark.range(100).select(F.col("id"), F.xxhash64("id").alias("fp")))
-    rows = {(r.id, r.fp) for r in spark.read.parquet(base).select("id", "fp").collect()}
-    # crash between compact()'s two renames: live index only at _precompact
-    os.rename(base, base + "_precompact")
-    idx.compact(spark)  # must restore, then compact normally
-    assert {(r.id, r.fp) for r in spark.read.parquet(base).select("id", "fp").collect()} == rows
-    assert not os.path.exists(base + "_precompact")
-    # both live and _precompact present: refuse rather than bury the live one
-    shutil.copytree(base, base + "_precompact")
-    with pytest.raises(RuntimeError, match="refusing to compact"):
-        idx.compact(spark)
-    assert os.path.exists(base) and os.path.exists(base + "_precompact")
 
 
 def _stored_ids(spark, corpus):
@@ -352,7 +333,7 @@ def test_maintain_compacts_only_fragmented_bands(spark, tmp_path):
     """Per-band maintenance: bands over the file threshold are compacted
     to one file; untouched bands keep their exact files (byte-identical,
     never rewritten) — the property that makes maintain() affordable on a
-    terabyte index where compact()'s full rewrite is not."""
+    terabyte index where a full rewrite is not."""
     base = str(tmp_path / "idx")
     idx = BandedFingerprintIndex(base, "fp", n_bands=8)
     idx.build_from(spark.range(400).select(F.col("id"), F.xxhash64("id").alias("fp")))
@@ -484,32 +465,6 @@ def test_reband_crash_recovery(spark, tmp_path):
     assert _index_pairs(spark, base) == rows
     assert json.load(open(base + "/_meta.json"))["n_bands"] == 8  # live kept
     assert not os.path.exists(base + "_rebandold")
-
-
-def test_crashed_compact_recovered_at_open(spark, tmp_path):
-    """A death between compact()'s two renames leaves the live index at
-    _precompact. A fresh open must restore it — otherwise exists()
-    reports the index gone (full silent rebuild) and the stale
-    _precompact poisons every later compact() with the both-exist
-    refusal. The both-present case stays compact()'s loud refusal."""
-    import shutil
-
-    base = str(tmp_path / "idx")
-    idx = BandedFingerprintIndex(base, "fp", n_bands=4)
-    idx.build_from(spark.range(100).select(F.col("id"), F.xxhash64("id").alias("fp")))
-    rows = _index_pairs(spark, base)
-    os.rename(base, base + "_precompact")
-    os.makedirs(base + "_compacting")  # possibly-partial staging
-    fresh = BandedFingerprintIndex(base, "fp")
-    assert fresh.exists(spark)  # open-time heal restored the live index
-    assert _index_pairs(spark, base) == rows
-    assert not os.path.exists(base + "_precompact")
-    assert not os.path.exists(base + "_compacting")
-    # ambiguous both-present state is untouched by opens
-    shutil.copytree(base, base + "_precompact")
-    another = BandedFingerprintIndex(base, "fp")
-    assert another.exists(spark)
-    assert os.path.exists(base + "_precompact")
 
 
 def test_span_stream_deleted_corpus_invalidates_sidecars(spark, tmp_path):

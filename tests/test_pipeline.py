@@ -26,6 +26,19 @@ def test_validation_filters_bad_rows(spark):
     assert normalize.quarantine_events(bronze).count() == 2
 
 
+def test_quarantine_keeps_duplicate_invalid_rows(spark):
+    """A malformed listing scraped twice, byte-identical, is quarantined
+    twice: the quarantine-ratio gate counts rows, not distinct rows."""
+    from fest_vibes_ai_etl_spark.pipeline.fixtures import EVENT_DTO, bronze_rows
+
+    rows = bronze_rows()
+    bad = [r for r in rows if r[2][0] is None]  # missing event_date
+    assert bad
+    bronze = spark.createDataFrame(rows + [bad[0], bad[0]], EVENT_DTO)
+    assert normalize.validate_events(bronze).count() == 5
+    assert normalize.quarantine_events(bronze).count() == 4
+
+
 def test_genre_dim(silver):
     names = {r.name for r in silver["genres"].collect()}
     assert names == {"Jazz", "Blues", "Soul", "Funk", "Brass"}
